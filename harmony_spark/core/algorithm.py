@@ -8,19 +8,28 @@ and is broadcast each pass. The soft assignment R is NEVER materialized
 ``self._r_state`` and recomputed inside whichever kernel needs it. The
 N-sized data never moves to the driver and never shuffles.
 
-Per harmony round (reference lifecycle R/utils.R:15-46):
-  cold-start pass (src/harmony.cpp:214-228) — the ONE row-writing job:
-    apply previous correction, normalize -> zn, fused O/E/objective
-    partials (tag rows);
-  x max_iter_cluster E-steps (:318-323) — aggregation-only jobs:
-    * ``estep_mode="batch"``: one job, full-batch fixed point;
-    * ``estep_mode="blocked"``: the reference's online update (C3),
-      one job per block — driver subtracts the block's cached O/E
-      contribution, the job reassigns it against the decremented
+Per harmony round (reference lifecycle R/utils.R:15-46), one driver
+method (``_round_pass``) whatever the partition count:
+  row-writing pass (src/harmony.cpp:214-228) — the ONE pass that writes
+    N-sized rows: apply previous correction, normalize -> zn, cold-start
+    O/E/objective partials (tag rows);
+  kmeans E-step loop (:318-323) — ``kernels.kmeans_chain``, written once
+    over a partials source:
+    * ``estep_mode="batch"``: one source call per E-step, full-batch
+      fixed point;
+    * ``estep_mode="blocked"``: the reference's online update (C3), one
+      call per block — the chain subtracts the block's cached O/E
+      contribution, the call reassigns it against the decremented
       penalty, the new contribution is added back;
-  moe partials pass (:561-609)  -> per-combo Gram/RHS sums;
+  moe partials (:561-609) -> per-combo Gram/RHS sums;
   driver: C5 support filter (:350-402), λ auto (M8), K ridge solves
   (M6), centroid update (M3)    -> W_all for the next round.
+The partition count picks where the partials come from. At or below
+``FUSE_CELLS`` cells the data sits on ONE partition and the row-writing
+pass also runs the whole chain and the MoE partials in-kernel; the
+driver replays the chain from the pass's tagged rows. On several
+partitions each chain call is one aggregation-only E-step job and the
+MoE partials are one more job.
 Convergence: window-3 cluster check + harmony check (:173-205), driver
 floats. Both E-step modes are pinned to the NumPy cross-oracle
 (numpy_ref.py) by allclose tests; ``run_harmony(mode="blocked-local")``
@@ -30,7 +39,6 @@ single-node-sized data.
 
 from __future__ import annotations
 
-import os
 import sys
 
 import numpy as np
@@ -45,6 +53,7 @@ from harmony_spark.core.params import HarmonyOptions, ResolvedParams, resolve_pa
 from harmony_spark.core.scalars import SCALAR as F32, SPARK_SCALAR  # noqa: E402
 
 _INIT_SAMPLE_CAP = 30_000  # driver-side kmeans sample (init only)
+FUSE_CELLS = 65_536  # at or below: one partition, one Arrow pass per round
 
 
 class HarmonySpark:
@@ -76,7 +85,6 @@ class HarmonySpark:
         self._init_Y_arg = init_Y
         self.estep_mode = estep_mode
         self._n_blocks_arg = n_blocks
-        self._block_contrib: list[np.ndarray] = []
         self.spark: SparkSession = df.sparkSession
         self.vars_use = list(vars_use)
         self.code_cols = [f"code_{i}" for i in range(len(vars_use))]
@@ -153,20 +161,16 @@ class HarmonySpark:
         # O(shuffle.partitions) tiny ones; at 1e9 cells this is 100k
         # tasks/pass on a cluster, at N=500 it is one.
         target_parts = max(1, min(self.spark.sparkContext.defaultParallelism, -(-N // 10_000)))
-        # below the fuse cap, collapse to ONE partition: the whole kmeans
-        # loop (and the MoE partials) then runs as a single Arrow pass
-        # per round (_kmeans_loop fused path) instead of one job per
-        # iteration — at 32k cells the per-job scheduler floor costs far
-        # more than the lost map parallelism (a 64k-cell task is a few
-        # tens of MB / tens of ms of vectorized numpy, guide §2.2: fewer,
-        # larger partitions; §4: collapse tiny mapInPandas round-trips).
-        # Above the cap the distributed per-iteration path is unchanged —
-        # at 1e9 cells this branch never fires.
-        if N <= int(os.environ.get("HARMONY_FUSE_CELLS", "65536")):
+        # at or below FUSE_CELLS, collapse to ONE partition: each round
+        # then runs as a single Arrow pass (kernels.make_round_kernel)
+        # instead of one job per E-step — at 32k cells the per-job
+        # scheduler floor costs far more than the lost map parallelism
+        # (a 64k-cell task is a few tens of MB / tens of ms of vectorized
+        # numpy, guide §2.2: fewer, larger partitions; §4: collapse tiny
+        # mapInPandas round-trips). repartition/mapInPandas/
+        # localCheckpoint all preserve the partition count across rounds.
+        if N <= FUSE_CELLS:
             target_parts = 1
-        # single-partition inputs qualify for the fused kmeans-loop pass
-        # (_kmeans_loop); repartition/mapInPandas/localCheckpoint all
-        # preserve the partition count across rounds
         self._cells_nparts = target_parts
         cells = cells.repartition(target_parts)
         # LAZY persist: every first consumer (the init sample collect /
@@ -231,241 +235,33 @@ class HarmonySpark:
         return df
 
     @property
-    def _pass_schema(self) -> str:
+    def _round_schema(self) -> str:
         codes = ", ".join(f"{c} int" for c in self.code_cols)
         return (
             f"cell_id long, z_orig array<{SPARK_SCALAR}>, {codes}, "
-            f"zn array<{SPARK_SCALAR}>, "
-            "blk int, o array<double>, rlogr array<double>, rdist double"
-        )
-
-    @property
-    def _round_schema(self) -> str:
-        # the fused-round pass additionally tags rows with the loop
-        # iteration and carries the MoE combo partials
-        return (
-            self._pass_schema
-            + ", it int, combo array<long>, s array<double>, m array<double>"
+            f"zn array<{SPARK_SCALAR}>, {kernels.ROUND_TAG_SCHEMA}"
         )
 
     # ------------------------------------------------------------ passes
     #
     # R is never materialized: the current soft assignment is described
     # by `self._r_state` (Y, sigma [, theta, O, E]) and recomputed
-    # inside whichever kernel needs it. Per round only the cold-start
-    # pass writes N-sized rows (the zn column); the E-steps are
-    # aggregation-only jobs over the cached zn.
+    # inside whichever kernel needs it. Per round only the row-writing
+    # pass writes N-sized rows (the zn column); the E-steps only
+    # aggregate, over the cached zn or, on one partition, over the
+    # pass's in-memory batches.
 
-    def _cold_start_pass(
-        self, source: DataFrame, with_prev_correction: bool, push_objective: bool, round_idx: int
-    ) -> DataFrame:
-        state = {"Y": self.Y, "sigma": self.p.sigma}
-        if with_prev_correction:
-            state["W_all"] = self.W_all
-            state["prev_state"] = self._r_state
-        if self.estep_mode == "blocked":
-            state["nb"] = self.n_blocks
-            state["round_idx"] = round_idx
-        bc = self._broadcast(**state)
-        kernel = kernels.make_cold_start_kernel(
-            bc, self.code_cols, self.p.offsets, self.p.K, self.p.B
-        )
-        # materialize=False: the partials collect below filters AFTER the
-        # cache layer, so its one job both fills the round's cache and
-        # returns the O/E partials — the separate count() job the old
-        # path paid per cold start is gone.
-        full = self._swap_persist(
-            source.mapInPandas(kernel, schema=self._pass_schema),
-            materialize=False,
-        )
-        parts = (
-            full.where(F.col("cell_id").isNull())
-            .select("blk", "o", "rlogr", "rdist")
-            .collect()
-        )
-        self._finish_partials(parts, push_objective)
-        # the fresh assignment is penalty-free against the current Y
-        self._r_state = {"Y": self.Y, "sigma": self.p.sigma, "penalty": False}
-        return full.where(F.col("cell_id").isNotNull()).drop("blk", "o", "rlogr", "rdist")
-
-    def _estep_pass(self, cells: DataFrame, round_idx: int) -> None:
-        """One E-step. ``batch`` mode: one aggregation-only job over all
-        cells. ``blocked`` mode (C3, src/harmony.cpp:269-342): the round's
-        cells are split into n_blocks by the arithmetic hash; each block
-        is removed from O/E (driver subtraction of its cached
-        contribution), reassigned against the decremented penalty, and
-        added back — one aggregation job per block, sequential through
-        the shared O/E exactly like the reference's online update.
-        Block membership is fixed within a round (re-randomized across
-        rounds via the round index); the reference reshuffles every
-        E-step — same randomized-block-coordinate-descent family."""
-        if self.estep_mode == "batch":
-            state = {
-                "Y": self.Y,
-                "sigma": self.p.sigma,
-                "theta": self.p.theta,
-                "O": self.O,
-                "E": self.E,
-                "penalty": True,
-            }
-            bc = self._broadcast(**state)
-            kernel = kernels.make_estep_kernel(
-                bc, self.code_cols, self.p.offsets, self.p.K, self.p.B
-            )
-            parts = (
-                cells.select("cell_id", "zn", *self.code_cols)
-                .mapInPandas(kernel, schema=kernels.PARTIAL_SCHEMA)
-                .collect()
-            )
-            self._r_state = state
-            self._finish_partials(parts, push_objective=True)
-            return
-
-        # blocked online mode — the Gauss-Seidel state chain itself lives
-        # in kernels.blocked_estep_chain (shared with the fused
-        # single-partition kernel); this path supplies per-block partials
-        # via one Spark job per block
+    def _round_pass(self, source: DataFrame, round_idx: int) -> tuple[DataFrame, int, dict]:
+        """One harmony round: the row-writing pass (cold start), the
+        kmeans E-step loop and the MoE combo partials.  On ONE partition
+        the pass runs all three (kernels.make_round_kernel) and the
+        driver replays the loop from its tagged partial rows; on several
+        the pass is the cold start alone (kernels.make_cold_start_kernel)
+        and every E-step and the MoE partials are their own jobs.  Both
+        drive the same kernels.kmeans_chain, so the two strategies stay
+        bit-identical.  Returns (cells_with_zn, kmeans_iters, combos)."""
         p = self.p
-        nb = self.n_blocks
-        block_expr = F.pmod(
-            (F.col("cell_id") % kernels.BLOCK_P) * kernels.BLOCK_A
-            + F.lit(round_idx * kernels.BLOCK_B),
-            F.lit(nb),
-        )
-
-        def run_block(i: int, state_i: dict):
-            bc = self._broadcast(**state_i)
-            kernel = kernels.make_estep_kernel(
-                bc, self.code_cols, p.offsets, p.K, p.B
-            )
-            parts = (
-                cells.where(block_expr == i)
-                .select("cell_id", "zn", *self.code_cols)
-                .mapInPandas(kernel, schema=kernels.PARTIAL_SCHEMA)
-                .collect()
-            )
-            C_new = np.zeros((p.K, p.B), dtype=np.float64)
-            rl = np.zeros(p.K, dtype=np.float64)
-            rd = 0.0
-            for row in parts:
-                C_new += np.asarray(row["o"]).reshape(p.K, p.B)
-                rl += np.asarray(row["rlogr"])
-                rd += row["rdist"]
-            return C_new, rl, rd
-
-        self._estep_apply_blocked(round_idx, run_block)
-
-    def _estep_apply_blocked(self, round_idx: int, run_block) -> None:
-        """Blocked-mode driver bookkeeping around one E-step: run the
-        shared state chain with ``run_block`` as the partials source,
-        commit O/E/_r_state and push the objective.  Used by both the
-        per-block-job path and the fused-chain replay."""
-        p = self.p
-        nb = self.n_blocks
-        O, states, rlogr_tot, rdist_tot = kernels.blocked_estep_chain(
-            self.O,
-            self._block_contrib,
-            self.Y,
-            p.sigma,
-            p.theta,
-            p.Pr_b,
-            p.B_vec[0],
-            nb,
-            run_block,
-        )
-        self.O = O.astype(F32)
-        mass = O[:, : p.B_vec[0]].sum(axis=1)
-        self.E = (mass[:, None] * p.Pr_b[None, :].astype(np.float64)).astype(F32)
-        self._r_state = {
-            "blocked": True,
-            "states": states,
-            "iter": round_idx,
-            "nb": nb,
-        }
-        self.objective_kmeans.append(
-            kernels.km_objective(
-                self.O, self.E, p.sigma, p.theta, rlogr_tot, rdist_tot, p.N
-            )
-        )
-
-    def _kmeans_loop(self, cells: DataFrame, round_idx: int) -> int:
-        """One harmony round's kmeans E-step loop (the DISTRIBUTED
-        per-iteration path — single-partition inputs take _fused_round
-        instead); returns the number of iterations run."""
-        p = self.p
-        iters = 0
-        for it in range(p.max_iter_cluster):
-            self._estep_pass(cells, round_idx)
-            iters = it + 1
-            if it > p.window_size and self._kmeans_converged():
-                break
-        return iters
-
-    def _replay_chain(self, rows, round_idx: int) -> int:
-        """Replay the driver bookkeeping from the fused pass's
-        per-(iteration, block) chain partial rows — bit-identical to the
-        per-iteration jobs' because the chain/objective code is shared
-        (kernels._run_chain / blocked_estep_chain / km_objective).
-        Returns the number of iterations the in-kernel loop ran."""
-        p = self.p
-        blocked = self.estep_mode == "blocked"
-        by_it: dict[int, list] = {}
-        for row in rows:
-            by_it.setdefault(row["it"], []).append(row)
-        iters = 0
-        for it in sorted(by_it):
-            parts = by_it[it]
-            if blocked:
-                by_blk = {row["blk"]: row for row in parts}
-
-                def run_block(i: int, state_i: dict, _b=by_blk):
-                    row = _b[i]
-                    return (
-                        np.asarray(row["o"]).reshape(p.K, p.B),
-                        np.asarray(row["rlogr"]),
-                        row["rdist"],
-                    )
-
-                self._estep_apply_blocked(round_idx, run_block)
-            else:
-                state = {
-                    "Y": self.Y,
-                    "sigma": p.sigma,
-                    "theta": p.theta,
-                    "O": self.O,
-                    "E": self.E,
-                    "penalty": True,
-                }
-                self._r_state = state
-                self._finish_partials(
-                    [
-                        {
-                            "blk": 0,
-                            "o": row["o"],
-                            "rlogr": row["rlogr"],
-                            "rdist": row["rdist"],
-                        }
-                        for row in parts
-                    ],
-                    push_objective=True,
-                )
-            iters = it + 1
-        return iters
-
-    def _fused_round(
-        self, source: DataFrame, round_idx: int
-    ) -> tuple[DataFrame, int, dict]:
-        """One WHOLE harmony round as ONE Arrow pass (single-partition
-        inputs only, kernels.make_round_kernel): cold-start correction +
-        re-assignment, the full kmeans E-step loop, and the MoE combo
-        partials — what the distributed path runs as 3+ jobs (guide §4).
-        Returns (cells_with_zn, kmeans_iters, moe_combos); driver
-        bookkeeping (O/E/objectives/_r_state) is replayed from the
-        tagged partial rows and stays bit-identical to the distributed
-        path's."""
-        p = self.p
-        blocked = self.estep_mode == "blocked"
-        nb = self.n_blocks if blocked else 1
+        nb = self.n_blocks if self.estep_mode == "blocked" else 1
         state = dict(
             Y=self.Y,
             sigma=p.sigma,
@@ -479,100 +275,111 @@ class HarmonySpark:
             N=p.N,
             Pr_b=p.Pr_b,
             B0=p.B_vec[0],
-            moe=True,
-        )
-        with_prev = round_idx > 0
-        if with_prev:
-            state["W_all"] = self.W_all
-            state["prev_state"] = self._r_state
-        bc = self.spark.sparkContext.broadcast(state)
-        kernel = kernels.make_round_kernel(
-            bc, self.code_cols, p.offsets, p.K, p.B
         )
         cols = ["cell_id", "z_orig", *self.code_cols]
-        if with_prev:
+        if round_idx > 0:
+            state["W_all"] = self.W_all
+            state["prev_state"] = self._r_state
             cols.append("zn")
+        fused = self._cells_nparts == 1
+        make = kernels.make_round_kernel if fused else kernels.make_cold_start_kernel
+        kernel = make(self._broadcast(**state), self.code_cols, p.offsets, p.K, p.B)
+        # materialize=False: the partials collect below filters AFTER the
+        # cache layer, so its one job both fills the round's cache and
+        # returns the partials.
         full = self._swap_persist(
             source.select(*cols).mapInPandas(kernel, schema=self._round_schema),
             materialize=False,
         )
-        parts = (
-            full.where(F.col("cell_id").isNull())
-            .select("it", "blk", "o", "rlogr", "rdist", "combo", "s", "m")
-            .collect()
-        )
-        # cold-start partials -> O/E/_block_contrib (+ the init objective
-        # on round 0, matching the reference's init pass)
-        self._finish_partials(
-            [r for r in parts if r["it"] == kernels.ROUND_IT_COLD],
-            push_objective=(round_idx == 0),
-        )
-        self._r_state = {"Y": self.Y, "sigma": p.sigma, "penalty": False}
-        iters = self._replay_chain(
-            [r for r in parts if r["it"] >= 0], round_idx
-        )
-        combos: dict[tuple, tuple] = {}
-        for row in parts:
-            if row["it"] != kernels.ROUND_IT_MOE:
-                continue
-            c = tuple(row["combo"])
-            S = np.asarray(row["s"])
-            M = np.asarray(row["m"]).reshape(p.K, p.d)
-            if c in combos:
-                combos[c] = (combos[c][0] + S, combos[c][1] + M)
-            else:
-                combos[c] = (S, M)
+        parts = full.where(F.col("cell_id").isNull()).select(*kernels.ROUND_TAG_COLS).collect()
+        if round_idx == 0:
+            # cells0 (its own z_orig copy) is only a source for init + the
+            # round-0 pass; dropping it now halves the steady-state cache —
+            # at 1e9 cells x 64 dims that is ~256 GB of cluster memory back.
+            self.cells0.unpersist()
         cells = full.where(F.col("cell_id").isNotNull()).select(
             "cell_id", "z_orig", *self.code_cols, "zn"
         )
-        return cells, iters, combos
 
-    def _finish_partials(self, parts, push_objective: bool) -> None:
-        """Final reduction of the per-partition partials: O, E (A4/A5)
-        and the objective (A6; cross term contracts to sigma_k theta_b
-        O_kb log((O+E+1)/(2E+1))). push_objective=False for the
-        round>=2 cold start, which in the reference re-estimates O/E
-        without recording an objective (src/harmony.cpp:214-228)."""
-        p = self.p
-        nb = self.n_blocks if self.estep_mode == "blocked" else 1
-        per_block = [np.zeros((p.K, p.B), dtype=np.float64) for _ in range(nb)]
-        rlogr = np.zeros(p.K, dtype=np.float64)
-        rdist = 0.0
-        for row in parts:
-            per_block[row["blk"] or 0] += np.asarray(row["o"]).reshape(p.K, p.B)
-            rlogr += np.asarray(row["rlogr"])
-            rdist += row["rdist"]
-        O = np.sum(per_block, axis=0)
-        self._block_contrib = per_block
-        self.O = O.astype(F32)
-        mass = O[:, : p.B_vec[0]].sum(axis=1)  # sum_i R_ki via covariate 0
-        self.E = (mass[:, None] * p.Pr_b[None, :].astype(np.float64)).astype(F32)
-        if not push_objective:
-            return
-        norm_const = 2000.0 / p.N
-        entropy = float((rlogr * p.sigma).sum())
-        log_term = np.log((self.O + self.E + 1.0) / (2.0 * self.E + 1.0))
-        cross = float((p.sigma[:, None] * p.theta[None, :] * log_term * self.O).sum())
-        self.objective_kmeans.append((rdist + entropy + cross) * norm_const)
+        O_blocks, rlogr, rdist = self._sum_partials(
+            [r for r in parts if r["it"] == kernels.ROUND_IT_COLD], nb
+        )
+        self.O, self.E = kernels.counts_f32(O_blocks.sum(axis=0), p.Pr_b, p.B_vec[0])
+        if round_idx == 0:
+            # the init objective opens both traces (src/harmony.cpp:131-146);
+            # later cold starts re-estimate O/E without recording one
+            # (:214-228)
+            obj = kernels.km_objective(self.O, self.E, p.sigma, p.theta, rlogr, rdist, p.N)
+            self.objective_kmeans.append(obj)
+            self.objective_harmony.append(obj)
 
-    def _moe_partials(self, cells: DataFrame) -> dict[tuple, tuple[np.ndarray, np.ndarray]]:
-        p = self.p
-        bc = self._broadcast(**self._r_state)
-        kernel = kernels.make_moe_partials_kernel(bc, self.code_cols, p.offsets, p.K, p.d)
-        rows = cells.select("cell_id", "z_orig", "zn", *self.code_cols).mapInPandas(
-            kernel, schema="combo array<long>, s array<double>, m array<double>"
-        ).collect()
-        acc: dict[tuple, list] = {}
-        for row in rows:
-            combo = tuple(row["combo"])
+        if fused:
+            chain = iter(sorted((r for r in parts if r["it"] >= 0), key=lambda r: r["it"]))
+
+            def partials(i: int, st: dict):
+                row = next(chain)
+                return np.asarray(row["o"]).reshape(p.K, p.B), np.asarray(row["rlogr"]), row["rdist"]
+        else:
+            partials = self._estep_jobs(cells, round_idx)
+        self.O, self.E, self._r_state, objs = kernels.kmeans_chain(
+            state, self.O, self.E, list(O_blocks), partials
+        )
+        self.objective_kmeans.extend(objs)
+
+        if fused:
+            moe_rows = [r for r in parts if r["it"] == kernels.ROUND_IT_MOE]
+        else:
+            bc = self._broadcast(**self._r_state)
+            kernel = kernels.make_moe_partials_kernel(bc, self.code_cols, p.offsets, p.K, p.d)
+            moe_rows = cells.select("cell_id", "z_orig", "zn", *self.code_cols).mapInPandas(
+                kernel, schema="combo array<long>, s array<double>, m array<double>"
+            ).collect()
+        combos: dict[tuple, tuple] = {}
+        for row in moe_rows:
+            c = tuple(row["combo"])
             S = np.asarray(row["s"])
             M = np.asarray(row["m"]).reshape(p.K, p.d)
-            if combo in acc:
-                acc[combo][0] += S
-                acc[combo][1] += M
-            else:
-                acc[combo] = [S, M]
-        return {c: (v[0], v[1]) for c, v in acc.items()}
+            combos[c] = (combos[c][0] + S, combos[c][1] + M) if c in combos else (S, M)
+        return cells, len(objs), combos
+
+    def _estep_jobs(self, cells: DataFrame, round_idx: int):
+        """The kmeans_chain partials source over several partitions: one
+        aggregation-only E-step job per call over the block's cells
+        (every cell in batch mode).  Blocked mode (C3,
+        src/harmony.cpp:269-342) splits the round's cells into n_blocks
+        by the arithmetic hash, fixed within a round and re-randomized
+        across rounds via the round index; the reference reshuffles
+        every E-step — same randomized-block-coordinate-descent family."""
+        p = self.p
+        cells = cells.select("cell_id", "zn", *self.code_cols)
+        block_expr = F.pmod(
+            (F.col("cell_id") % kernels.BLOCK_P) * kernels.BLOCK_A
+            + F.lit(round_idx * kernels.BLOCK_B),
+            F.lit(self.n_blocks),
+        )
+
+        def partials(i: int, state: dict):
+            bc = self._broadcast(**state)
+            kernel = kernels.make_estep_kernel(bc, self.code_cols, p.offsets, p.K, p.B)
+            block = cells.where(block_expr == i) if self.estep_mode == "blocked" else cells
+            O, rlogr, rdist = self._sum_partials(
+                block.mapInPandas(kernel, schema=kernels.PARTIAL_SCHEMA).collect()
+            )
+            return O[0], rlogr, rdist
+
+        return partials
+
+    def _sum_partials(self, rows, nb: int = 1):
+        """Sum partial rows: O per online block (A4), R·logR and R·dist."""
+        p = self.p
+        O = np.zeros((nb, p.K, p.B), dtype=np.float64)
+        rlogr = np.zeros(p.K, dtype=np.float64)
+        rdist = 0.0
+        for row in rows:
+            O[row["blk"]] += np.asarray(row["o"]).reshape(p.K, p.B)
+            rlogr += np.asarray(row["rlogr"])
+            rdist += row["rdist"]
+        return O, rlogr, rdist
 
     # ------------------------------------------------------------ driver math
 
@@ -752,13 +559,6 @@ class HarmonySpark:
 
     # ------------------------------------------------------------ lifecycle
 
-    def _kmeans_converged(self) -> bool:
-        w = self.p.window_size
-        obj = self.objective_kmeans
-        obj_old = sum(obj[-2 - i] for i in range(w))
-        obj_new = sum(obj[-1 - i] for i in range(w))
-        return abs(obj_old - obj_new) / abs(obj_old) < self.p.epsilon_cluster
-
     def _harmony_converged(self) -> bool:
         o = self.objective_harmony
         return (o[-2] - o[-1]) / abs(o[-2]) < self.p.epsilon_harmony
@@ -778,44 +578,9 @@ class HarmonySpark:
             )
         p = self.p
         self._init_Y()
-        fused = self._cells_nparts == 1
-        if not fused:
-            cells = self._cold_start_pass(
-                self.cells0, with_prev_correction=False, push_objective=True, round_idx=0
-            )
-            self.objective_harmony.append(self.objective_kmeans[-1])
-            # cells0 (its own z_orig copy) is only a source for init + the
-            # round-0 pass; dropping it now halves the steady-state cache —
-            # at 1e9 cells x 64 dims that is ~256 GB of cluster memory back.
-            # (_cold_start_pass materialized `cells` eagerly, so nothing
-            # recomputes through this lineage.)
-            self.cells0.unpersist()
-
+        cells = self.cells0
         for round_idx in range(p.max_iter):
-            if fused:
-                # single-partition inputs: cold start + kmeans loop + MoE
-                # partials are ONE Arrow pass per round (_fused_round)
-                cells, iters, combos = self._fused_round(
-                    self.cells0 if round_idx == 0 else cells, round_idx
-                )
-                if round_idx == 0:
-                    # the init objective (reference's init pass) sits
-                    # between the cold replay and the chain replay —
-                    # index it out of the kmeans trace like the
-                    # distributed flow does
-                    self.objective_harmony.insert(
-                        0, self.objective_kmeans[-iters - 1]
-                    )
-                    self.cells0.unpersist()
-            else:
-                if round_idx > 0:
-                    # cold start: re-estimate R from corrected embedding
-                    cells = self._cold_start_pass(
-                        cells, with_prev_correction=True, push_objective=False,
-                        round_idx=round_idx,
-                    )
-                iters = self._kmeans_loop(cells, round_idx)
-                combos = None
+            cells, iters, combos = self._round_pass(cells, round_idx)
             self.kmeans_rounds.append(iters)
             self.objective_harmony.append(self.objective_kmeans[-1])
             if verbose:
@@ -826,8 +591,6 @@ class HarmonySpark:
                     file=sys.stderr,
                 )
 
-            if combos is None:  # distributed path: separate MoE pass
-                combos = self._moe_partials(cells)
             self._solve_moe(combos)
 
             if progress is not None and progress(round_idx, self.objective_kmeans[-1]) is False:
@@ -1281,5 +1044,4 @@ def load_model(spark: SparkSession, path: str) -> "HarmonySpark":
     m._cells_final = None
     m.cells0 = None  # training cells are not persisted; run() is guarded
     m._persisted = None
-    m._block_contrib = []
     return m

@@ -18,6 +18,18 @@ cached zn column. At 100 TB this trades one extra GEMM+softmax per
 consumer against rewriting ~90 floats/cell/pass through Arrow — a
 large net win, and it also removes the K-float R column from the cache.
 
+Per harmony round:
+  1. the row-writing pass (`_round_pass_kernel`): previous correction,
+     normalize -> zn, penalty-free re-assignment, cold-start partials;
+  2. the kmeans E-step loop (`kmeans_chain`), written once over a
+     ``partials(block, state)`` source — a `make_estep_kernel` job
+     per call on several partitions, the row-writing pass's in-memory
+     batches on one (`make_round_kernel`), and the driver's replay of
+     that pass's tagged partial rows;
+  3. the MoE combo partials against the loop's final state — inside
+     the row-writing pass on one partition, else
+     `make_moe_partials_kernel`.
+
 Kernel map to the reference:
   * recompute_R   — M1 distance GEMM 2(1 - Zn Y) fused with P4 softmax
     and the diversity penalty (src/harmony.cpp:141,143-146,318-323).
@@ -169,64 +181,12 @@ class _PartialAcc:
             }
         )
 
-    def tag_rows(self, template: pd.DataFrame) -> pd.DataFrame:
-        out = pd.DataFrame({c: [None] * self.nb for c in template.columns})
-        out["blk"] = list(range(self.nb))
-        out["o"] = [self.O[i].ravel() for i in range(self.nb)]
-        out["rlogr"] = [self.rlogr[i] for i in range(self.nb)]
-        out["rdist"] = [float(self.rdist[i]) for i in range(self.nb)]
-        return out
 
-
-def make_cold_start_kernel(
-    bc, code_cols: list[str], offsets: list[int], K: int, B: int, feature_col: str = "z_orig"
-) -> Callable:
-    """Round boundary, the one row-writing pass: apply the previous
-    round's correction (recomputing the previous R from `prev_state`),
-    L2-normalize, penalty-free re-assignment, fused A4/A6 partials
-    (init: src/harmony.cpp:131-146; cold start: :214-228). Emits rows
-    (cell_id, z_orig, codes, zn) plus one NULL-tagged partial row per
-    partition."""
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        st = bc.value
-        Y = st["Y"]
-        sigma = st["sigma"]
-        W_all = st.get("W_all")  # None at init
-        prev_state = st.get("prev_state")
-        nb = st.get("nb", 1)  # >1: emit per-block partials for C3
-        round_idx = st.get("round_idx", 0)
-        acc = _PartialAcc(K, B, n_blocks=nb)
-        template = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            cell_ids = pdf["cell_id"].to_numpy(dtype=np.int64)
-            z = _stack(pdf[feature_col])
-            gcodes = _codes_matrix(pdf, code_cols, offsets)
-            if W_all is not None:
-                zn_prev = _stack(pdf["zn"])
-                R_prev, _ = recompute_R(zn_prev, gcodes, prev_state, cell_ids=cell_ids)
-                zc = _correction(z, R_prev, gcodes, W_all)
-            else:
-                zc = z
-            zn = _normalize_rows(zc)
-            dist = 2.0 * (1.0 - zn @ Y)
-            R = _soft_assign(dist, sigma)
-            blocks = block_ids(cell_ids, round_idx, nb) if nb > 1 else None
-            acc.add(R, dist, gcodes, blocks=blocks)
-            out = pdf[["cell_id", feature_col, *code_cols]].copy()
-            out["zn"] = list(zn.astype(F32))
-            out["blk"] = None
-            out["o"] = None
-            out["rlogr"] = None
-            out["rdist"] = None
-            template = out
-            yield out
-        if acc.seen:
-            yield acc.tag_rows(template)
-
-    return kernel
+def counts_f32(O: np.ndarray, Pr_b: np.ndarray, B0: int) -> tuple[np.ndarray, np.ndarray]:
+    """Float32 (O, E) from float64 O: E = per-cluster mass (summed over
+    covariate 0's levels) times the batch proportions (A4/A5)."""
+    mass = O[:, :B0].sum(axis=1)
+    return O.astype(F32), (mass[:, None] * Pr_b[None, :].astype(np.float64)).astype(F32)
 
 
 def km_objective(
@@ -239,9 +199,8 @@ def km_objective(
     N: int,
 ) -> float:
     """The kmeans objective (A6) from the POST-update float32 O/E and the
-    pass's float64 partials — one definition shared by the driver
-    bookkeeping and the fused in-kernel chain so both see bit-identical
-    floats."""
+    pass's float64 partials; the cross term contracts to
+    sigma_k theta_b O_kb log((O+E+1)/(2E+1))."""
     norm_const = 2000.0 / N
     entropy = float((rlogr * sigma).sum())
     log_term = np.log((O_f32 + E_f32 + 1.0) / (2.0 * E_f32 + 1.0))
@@ -249,67 +208,51 @@ def km_objective(
     return (rdist + entropy + cross) * norm_const
 
 
-def km_window_converged(obj: list[float], window: int, eps: float) -> bool:
-    """The sliding-window relative-change test of
-    HarmonySpark._kmeans_converged, expressed over a plain list so the
-    fused chain kernel can replay the identical stop decision (the first
-    possible check happens after window+2 in-loop objectives, so the
-    pre-loop history is never referenced)."""
-    obj_old = sum(obj[-2 - i] for i in range(window))
-    obj_new = sum(obj[-1 - i] for i in range(window))
-    return abs(obj_old - obj_new) / abs(obj_old) < eps
+def kmeans_chain(st: dict, O_f32, E_f32, contrib: list, partials: Callable):
+    """The kmeans E-step loop of one harmony round (src/harmony.cpp:
+    318-323), the ONE implementation every execution strategy runs.
 
-
-def blocked_estep_chain(
-    O_f32: np.ndarray,
-    block_contrib: list[np.ndarray],
-    Y: np.ndarray,
-    sigma: np.ndarray,
-    theta: np.ndarray,
-    Pr_b: np.ndarray,
-    B0: int,
-    nb: int,
-    run_block: Callable,
-):
-    """The Gauss-Seidel state chain of one blocked E-step (C3,
-    src/harmony.cpp:269-342): per block, subtract the cached
-    contribution, build the decremented penalty state, obtain the
-    block's new partials via ``run_block(i, state_i) -> (C_new, rlogr,
-    rdist)``, add back.  ``block_contrib`` is updated in place.  ONE
-    implementation shared by the distributed per-block-job path and the
-    fused single-pass kernel, so the two execution strategies follow
-    bit-identical float sequences."""
-    O = O_f32.astype(np.float64)
-    K = O.shape[0]
-    states: list[dict] = []
-    rlogr_tot = np.zeros(K, dtype=np.float64)
-    rdist_tot = 0.0
-    for i in range(nb):
-        C_i = block_contrib[i]
-        O_minus = O - C_i
-        mass_minus = O_minus[:, :B0].sum(axis=1)
-        E_minus = mass_minus[:, None] * Pr_b[None, :].astype(np.float64)
-        state_i = {
-            "Y": Y,
-            "sigma": sigma,
-            "theta": theta,
-            "O": O_minus.astype(F32),
-            "E": E_minus.astype(F32),
-            "penalty": True,
-        }
-        C_new, rl, rd = run_block(i, state_i)
-        rlogr_tot += rl
-        rdist_tot += rd
-        O = O_minus + C_new
-        block_contrib[i] = C_new
-        states.append(state_i)
-    return O, states, rlogr_tot, rdist_tot
-
-
-CHAIN_SCHEMA = (
-    "it int, blk int, o array<double>, rlogr array<double>, rdist double, "
-    "combo array<long>, s array<double>, m array<double>"
-)
+    ``partials(block, state) -> (O, rlogr, rdist)`` returns the float64
+    partial sums over the block's cells (block 0 = every cell in batch
+    mode) with R recomputed against ``state``.  ``st`` carries Y, sigma,
+    theta, mode, nb, round_idx, max_iter, window, eps, N, Pr_b, B0.
+    Float32 O/E are carried between iterations; in blocked mode (C3,
+    :269-342) ``contrib`` holds each online block's float64 contribution
+    (the cold-start partials, updated in place) and each block is
+    removed from O/E, reassigned against the decremented penalty and
+    added back.  The loop stops on the window test over its own
+    objectives (C4; the first check follows window+2 of them, so no
+    earlier history is needed).  Returns (O, E, r_state, objectives);
+    r_state describes the final assignment."""
+    Y, sigma, theta = st["Y"], st["sigma"], st["theta"]
+    Pr_b, B0, nb, w = st["Pr_b"], st["B0"], st["nb"], st["window"]
+    r_state = {"Y": Y, "sigma": sigma, "penalty": False}  # the cold start's
+    obj: list[float] = []
+    for itx in range(st["max_iter"]):
+        if st["mode"] == "batch":
+            r_state = dict(Y=Y, sigma=sigma, theta=theta, O=O_f32, E=E_f32, penalty=True)
+            O, rlogr, rdist = partials(0, r_state)
+        else:
+            O = O_f32.astype(np.float64)
+            states = []
+            rlogr, rdist = np.zeros(O.shape[0], dtype=np.float64), 0.0
+            for i in range(nb):
+                O_minus = O - contrib[i]
+                Om, Em = counts_f32(O_minus, Pr_b, B0)
+                states.append(dict(Y=Y, sigma=sigma, theta=theta, O=Om, E=Em, penalty=True))
+                contrib[i], rl, rd = partials(i, states[-1])
+                rlogr += rl
+                rdist += rd
+                O = O_minus + contrib[i]
+            r_state = {"blocked": True, "states": states, "iter": st["round_idx"], "nb": nb}
+        O_f32, E_f32 = counts_f32(O, Pr_b, B0)
+        obj.append(km_objective(O_f32, E_f32, sigma, theta, rlogr, rdist, st["N"]))
+        if itx > w:
+            obj_old = sum(obj[-2 - i] for i in range(w))
+            obj_new = sum(obj[-1 - i] for i in range(w))
+            if abs(obj_old - obj_new) / abs(obj_old) < st["eps"]:
+                break
+    return O_f32, E_f32, r_state, obj
 
 
 def _moe_accumulate(
@@ -318,7 +261,7 @@ def _moe_accumulate(
 ) -> None:
     """One batch of the MoE per-combo partials (A8 Gram entries S and A9
     RHS M), accumulated into ``acc``.  ONE implementation shared by the
-    standalone MoE pass and the fused chain kernel so both follow the
+    standalone MoE pass and the fused round pass so both follow the
     identical float sequence."""
     R, _ = recompute_R(zn, gcodes, st, cell_ids=cell_ids)
     R = R.astype(np.float64)
@@ -335,133 +278,63 @@ def _moe_accumulate(
             acc[combo_t] = [S, M]
 
 
-def _run_chain(st: dict, batches: list, K: int, B: int, O0_f32, E0_f32, contrib0):
-    """The WHOLE kmeans E-step loop of one harmony round, in-process —
-    valid exactly when the cells DataFrame has a single partition (then
-    every global reduction the per-iteration driver loop performed is
-    partition-local).  Returns (chain_rows, fstate): chain_rows are the
-    per-(iteration, block) partial tuples the driver replays its
-    unchanged bookkeeping from, fstate the FINAL assignment state (the
-    one the driver's replay ends up holding in _r_state).
-
-    State carried here mirrors the driver exactly: float32 O/E between
-    iterations, float64 block contributions, the shared
-    ``blocked_estep_chain`` for the Gauss-Seidel sequence, the shared
-    ``km_objective``/``km_window_converged`` for the stop decision."""
-    mode = st["mode"]
-    nb = st["nb"]
-    Y, sigma, theta = st["Y"], st["sigma"], st["theta"]
-    Pr_b, B0, N = st["Pr_b"], st["B0"], st["N"]
-    O_f32, E_f32 = O0_f32, E0_f32
-    contrib = [np.array(c, dtype=np.float64) for c in contrib0]
-    obj: list[float] = []
-    rows: list[tuple] = []
-    fstate: dict | None = None
-    for itx in range(st["max_iter"]):
-        if mode == "batch":
-            state = {
-                "Y": Y,
-                "sigma": sigma,
-                "theta": theta,
-                "O": O_f32,
-                "E": E_f32,
-                "penalty": True,
-            }
-            fstate = state
-            acc = _PartialAcc(K, B)
-            for zn, g, _ids in batches:
-                R, dist = _apply_state(zn, g, state)
-                acc.add(R, dist, g)
-            O64 = acc.O[0]
-            rl_tot, rd_tot = acc.rlogr[0], float(acc.rdist[0])
-            rows.append((itx, 0, list(O64.ravel()), list(rl_tot), rd_tot))
-            O_f32 = O64.astype(F32)
-            mass = O64[:, :B0].sum(axis=1)
-            E_f32 = (mass[:, None] * Pr_b[None, :].astype(np.float64)).astype(F32)
-        else:
-            per_block: list[tuple] = []
-
-            def run_block(i: int, state_i: dict):
-                acc = _PartialAcc(K, B)
-                for zn, g, ids in batches:
-                    blocks = block_ids(ids, st["round_idx"], nb)
-                    m = blocks == i
-                    if m.any():
-                        R, dist = _apply_state(zn[m], g[m], state_i)
-                        acc.add(R, dist, g[m])
-                res = (acc.O[0], acc.rlogr[0], float(acc.rdist[0]))
-                per_block.append(res)
-                return res
-
-            O64, blk_states, rl_tot, rd_tot = blocked_estep_chain(
-                O_f32, contrib, Y, sigma, theta, Pr_b, B0, nb, run_block
-            )
-            fstate = {
-                "blocked": True,
-                "states": blk_states,
-                "iter": st["round_idx"],
-                "nb": nb,
-            }
-            for i, (c_new, rl, rd) in enumerate(per_block):
-                rows.append((itx, i, list(c_new.ravel()), list(rl), rd))
-            O_f32 = O64.astype(F32)
-            mass = O64[:, :B0].sum(axis=1)
-            E_f32 = (mass[:, None] * Pr_b[None, :].astype(np.float64)).astype(F32)
-        obj.append(
-            km_objective(O_f32, E_f32, sigma, theta, rl_tot, rd_tot, N)
-        )
-        if itx > st["window"] and km_window_converged(
-            obj, st["window"], st["eps"]
-        ):
-            break
-    return rows, fstate
+def _combo_frame(acc: dict) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "combo": [np.asarray(c, dtype=np.int64) for c in acc],
+            "s": [v[0] for v in acc.values()],
+            "m": [v[1].ravel() for v in acc.values()],
+        }
+    )
 
 
-# tag values for the non-cell rows of the fused round pass
-ROUND_IT_MOE = -1  # MoE combo partial rows
-ROUND_IT_COLD = -2  # cold-start (penalty-free re-assignment) partial rows
+# the partial columns of the row-writing pass (NULL on cell rows); "it"
+# tags what a partial row carries: ROUND_IT_COLD the cold-start partials
+# (one row per online block), ROUND_IT_MOE the MoE combo partials, and
+# it >= 0 the in-kernel chain's partials in call order
+ROUND_TAG_SCHEMA = (
+    "it int, blk int, o array<double>, rlogr array<double>, rdist double, "
+    "combo array<long>, s array<double>, m array<double>"
+)
+ROUND_TAG_COLS = tuple(f.split()[0] for f in ROUND_TAG_SCHEMA.split(", "))
+ROUND_IT_MOE = -1
+ROUND_IT_COLD = -2
 
 
-def make_round_kernel(
+def _tagged(columns, frame: pd.DataFrame) -> pd.DataFrame:
+    """``frame``'s partial columns as rows of the pass schema, every
+    other column NULL."""
+    out = pd.DataFrame({c: [None] * len(frame) for c in columns})
+    for c in frame.columns:
+        out[c] = frame[c].to_numpy(dtype=object)
+    return out
+
+
+def _round_pass_kernel(
     bc, code_cols: list[str], offsets: list[int], K: int, B: int,
-    feature_col: str = "z_orig",
+    feature_col: str, fused: bool,
 ) -> Callable:
-    """ONE harmony round as ONE Arrow pass (single-partition inputs
-    only): the cold-start correction + normalize + penalty-free
-    re-assignment (make_cold_start_kernel's work), the whole kmeans
-    E-step loop (_run_chain), and the MoE per-combo partials against the
-    loop's final state (_moe_accumulate) — what used to be 3+ jobs per
-    round is one (guide §4: collapse tiny mapInPandas round-trips).
-
-    Emits the N (cell_id, z_orig, codes, zn) rows plus tagged partial
-    rows: it == ROUND_IT_COLD carries the cold-start partials (one row
-    per online block), it >= 0 the per-(iteration, block) chain
-    partials, it == ROUND_IT_MOE the MoE combo partials.  The driver
-    replays its unchanged bookkeeping from these rows; every float
-    sequence is shared with the per-iteration distributed path
-    (_PartialAcc / blocked_estep_chain / km_objective), so the two
-    strategies stay bit-identical."""
+    """The round's one row-writing pass, shared by make_cold_start_kernel
+    and make_round_kernel: apply the previous round's correction
+    (recomputing the previous R from ``prev_state``), L2-normalize,
+    penalty-free re-assignment with fused A4/A6 partials (init:
+    src/harmony.cpp:131-146; cold start: :214-228).  Emits the
+    (cell_id, z_orig, codes, zn) rows, then the ROUND_IT_COLD partial
+    rows.  ``fused`` (the partition holds every cell, so every global
+    reduction is partition-local) adds the whole kmeans_chain over the
+    in-memory batches and the MoE combo partials against its final
+    state — one Arrow pass per round instead of 3+ jobs (guide §4)."""
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         st = bc.value
         Y = st["Y"]
         sigma = st["sigma"]
-        W_all = st.get("W_all")  # None at init (round 0)
+        W_all = st.get("W_all")  # None at round 0
         prev_state = st.get("prev_state")
-        with_moe = bool(st.get("moe"))
-        mode = st["mode"]
-        nb_chain = st["nb"]
-        blocked = mode == "blocked"
-        # cold partials are per-block only in blocked mode (same as
-        # make_cold_start_kernel's nb handling)
-        nb_cold = nb_chain if blocked else 1
-        round_idx = st["round_idx"]
-        Pr_b, B0 = st["Pr_b"], st["B0"]
-
-        acc = _PartialAcc(K, B, n_blocks=nb_cold)
+        nb = st["nb"]  # >1: per-block cold partials for C3
+        acc = _PartialAcc(K, B, n_blocks=nb)
         batches: list[tuple] = []
-        moe_batches: list[tuple] = []
-        template = None
+        columns = None
         for pdf in it:
             if len(pdf) == 0:
                 continue
@@ -471,94 +344,78 @@ def make_round_kernel(
             if W_all is not None:
                 zn_prev = _stack(pdf["zn"])
                 R_prev, _ = recompute_R(zn_prev, gcodes, prev_state, cell_ids=cell_ids)
-                zc = _correction(z, R_prev, gcodes, W_all)
-            else:
-                zc = z
-            zn = _normalize_rows(zc)
+                z = _correction(z, R_prev, gcodes, W_all)
+            zn = _normalize_rows(z)
             dist = 2.0 * (1.0 - zn @ Y)
             R = _soft_assign(dist, sigma)
-            blocks = block_ids(cell_ids, round_idx, nb_cold) if nb_cold > 1 else None
+            blocks = block_ids(cell_ids, st["round_idx"], nb) if nb > 1 else None
             acc.add(R, dist, gcodes, blocks=blocks)
-            zn_f32 = zn.astype(F32)
-            batches.append((zn_f32, gcodes, cell_ids))
-            if with_moe:
-                moe_batches.append(
-                    (
-                        _stack(pdf[feature_col], dtype=np.float64),
-                        pdf[code_cols].to_numpy(dtype=np.int64),
-                    )
-                )
+            zn = zn.astype(F32)
+            if fused:
+                batches.append((zn, gcodes, cell_ids, blocks, pdf))
             out = pdf[["cell_id", feature_col, *code_cols]].copy()
-            out["zn"] = list(zn_f32)
-            out["it"] = None
-            out["blk"] = None
-            out["o"] = None
-            out["rlogr"] = None
-            out["rdist"] = None
-            out["combo"] = None
-            out["s"] = None
-            out["m"] = None
-            template = out
+            out["zn"] = list(zn)
+            for c in ROUND_TAG_COLS:
+                out[c] = None
+            columns = out.columns
             yield out
         if not acc.seen:
             return
+        yield _tagged(columns, acc.partial_frame().assign(it=ROUND_IT_COLD))
+        if not fused:
+            return
 
-        def tagged(frame: pd.DataFrame, it_tag: int) -> pd.DataFrame:
-            full = pd.DataFrame(
-                {c: [None] * len(frame) for c in template.columns}
-            )
-            for c in frame.columns:
-                full[c] = frame[c].to_numpy(dtype=object)
-            full["it"] = it_tag if "it" not in frame.columns else full["it"]
-            return full
+        chain: list[tuple] = []
 
-        # cold-start partials (the driver's _finish_partials input)
-        yield tagged(acc.partial_frame(), ROUND_IT_COLD)
+        def partials(i: int, state: dict):
+            pacc = _PartialAcc(K, B)
+            for zn, g, _ids, blocks, _pdf in batches:
+                if blocks is not None:
+                    m = blocks == i
+                    zn, g = zn[m], g[m]
+                if len(zn):
+                    R, dist = _apply_state(zn, g, state)
+                    pacc.add(R, dist, g)
+            chain.append((pacc.O[0], pacc.rlogr[0], float(pacc.rdist[0])))
+            return chain[-1]
 
-        # chain start state derived from the cold partials — the same
-        # arithmetic _finish_partials applies driver-side
-        O64_blocks = acc.O  # (nb_cold, K, B) float64
-        O = O64_blocks.sum(axis=0)
-        O_f32 = O.astype(F32)
-        mass = O[:, :B0].sum(axis=1)
-        E_f32 = (mass[:, None] * Pr_b[None, :].astype(np.float64)).astype(F32)
-        contrib0 = (
-            [O64_blocks[i] for i in range(nb_chain)]
-            if blocked
-            else [np.zeros((K, B), dtype=np.float64)]
-        )
-        rows, fstate = _run_chain(st, batches, K, B, O_f32, E_f32, contrib0)
-        yield tagged(
+        O_f32, E_f32 = counts_f32(acc.O.sum(axis=0), st["Pr_b"], st["B0"])
+        fstate = kmeans_chain(st, O_f32, E_f32, list(acc.O), partials)[2]
+        yield _tagged(
+            columns,
             pd.DataFrame(
                 {
-                    "it": [r[0] for r in rows],
-                    "blk": [r[1] for r in rows],
-                    "o": [r[2] for r in rows],
-                    "rlogr": [r[3] for r in rows],
-                    "rdist": [r[4] for r in rows],
+                    "it": list(range(len(chain))),
+                    "o": [c[0].ravel() for c in chain],
+                    "rlogr": [c[1] for c in chain],
+                    "rdist": [c[2] for c in chain],
                 }
             ),
-            0,
         )
-        if with_moe:
-            macc: dict[tuple, list] = {}
-            for (zn_b, g_b, ids_b), (z64_b, codes_b) in zip(
-                batches, moe_batches
-            ):
-                _moe_accumulate(macc, z64_b, zn_b, g_b, codes_b, fstate, ids_b)
-            yield tagged(
-                pd.DataFrame(
-                    {
-                        "blk": [-1] * len(macc),
-                        "combo": [np.asarray(c, dtype=np.int64) for c in macc],
-                        "s": [v[0] for v in macc.values()],
-                        "m": [v[1].ravel() for v in macc.values()],
-                    }
-                ),
-                ROUND_IT_MOE,
-            )
+        macc: dict[tuple, list] = {}
+        for zn, g, ids, _blocks, pdf in batches:
+            z64 = _stack(pdf[feature_col], dtype=np.float64)
+            codes = pdf[code_cols].to_numpy(dtype=np.int64)
+            _moe_accumulate(macc, z64, zn, g, codes, fstate, ids)
+        yield _tagged(columns, _combo_frame(macc).assign(it=ROUND_IT_MOE))
 
     return kernel
+
+
+def make_cold_start_kernel(
+    bc, code_cols: list[str], offsets: list[int], K: int, B: int, feature_col: str = "z_orig"
+) -> Callable:
+    """The row-writing pass alone (several partitions): the E-steps and
+    the MoE partials then run as their own jobs."""
+    return _round_pass_kernel(bc, code_cols, offsets, K, B, feature_col, fused=False)
+
+
+def make_round_kernel(
+    bc, code_cols: list[str], offsets: list[int], K: int, B: int, feature_col: str = "z_orig"
+) -> Callable:
+    """ONE harmony round as ONE Arrow pass (single-partition inputs only):
+    the row-writing pass plus the kmeans loop and the MoE partials."""
+    return _round_pass_kernel(bc, code_cols, offsets, K, B, feature_col, fused=True)
 
 
 def make_estep_kernel(bc, code_cols: list[str], offsets: list[int], K: int, B: int) -> Callable:
@@ -605,13 +462,7 @@ def make_moe_partials_kernel(
             codes = pdf[code_cols].to_numpy(dtype=np.int64)
             _moe_accumulate(acc, z, zn, gcodes, codes, st, cell_ids)
         if acc:
-            yield pd.DataFrame(
-                {
-                    "combo": [np.asarray(c, dtype=np.int64) for c in acc],
-                    "s": [v[0] for v in acc.values()],
-                    "m": [v[1].ravel() for v in acc.values()],
-                }
-            )
+            yield _combo_frame(acc)
 
     return kernel
 

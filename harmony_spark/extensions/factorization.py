@@ -45,6 +45,8 @@ from harmony_spark.registry import register
 RANK = 4
 LAMB = 0.1
 N_ITER = 3
+# rating count at or below which als_fit runs the single-pass fused loop
+FUSE_ROWS = 2_000_000
 
 
 def _init_factors(item_ids: list, rank: int = RANK) -> pd.DataFrame:
@@ -304,13 +306,12 @@ def als_fit(
     is a free by-product of the item-step census (Σ per-item counts),
     so callers need no separate count() job.
 
-    Below HARMONY_ALS_FUSE_ROWS ratings (default 2M) the whole loop
+    At or below FUSE_ROWS ratings (2M) the whole loop
     runs as one Arrow pass (_als_fit_fused); above it the distributed
     per-iteration path runs unchanged — at billion-rating scale the
     fused branch never fires."""
     spark = ratings.sparkSession
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    import os
 
     r0 = ratings.select(
         F.col(user_col).alias("user"),
@@ -322,7 +323,7 @@ def als_fit(
     hist = r0.groupBy("item").agg(F.count("*").alias("c")).collect()
     items = sorted(int(x["item"]) for x in hist)
     n_ratings = int(sum(x["c"] for x in hist))
-    if n_ratings <= int(os.environ.get("HARMONY_ALS_FUSE_ROWS", "2000000")):
+    if n_ratings <= FUSE_ROWS:
         return _als_fit_fused(r0, items, n_iter, lamb)
 
     # hash-partition the ratings on USER once, before the checkpoint:

@@ -1,11 +1,18 @@
 #!/usr/bin/env bash
-# Full local gate: test suite at sf0.001, oracle sweep at the driver's
-# sf0.01, and the bench contract. Mirrors what the round driver checks.
+# Full local gate: compile, test suite at sf0.001, benchmark helper
+# tests, oracle sweep at the driver's sf0.01, and the bench contract.
+# Mirrors the tier-1 list in ROADMAP.md.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+echo "== compile =="
+python -m compileall -q harmony_spark __spark_entry__.py
+
 echo "== pytest (sf0.001 fixtures + unit/property/plan/streaming) =="
 python -m pytest tests/ -q
+
+echo "== pytest (benchmark helpers) =="
+python -m pytest perfbench -q
 
 echo "== oracle sweep at sf0.01 (the driver's correctness SF) =="
 HARMONY_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_queries.py -q

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from harmony_spark.extensions import factorization
 from harmony_spark.extensions.factorization import (
     LAMB,
     N_ITER,
@@ -91,11 +92,11 @@ def test_als_rmse_decreases(spark, ratings):
 
 
 def test_als_fused_matches_distributed(spark, ratings, monkeypatch):
-    """The fused single-pass ALS (HARMONY_ALS_FUSE_ROWS path) must agree
+    """The fused single-pass ALS (FUSE_ROWS path) must agree
     with the distributed per-iteration path to float tolerance — the
     only difference between them is partial-sum order (~1e-12)."""
     U_f, V_f, rmse_f, n_f = als_fit(ratings)  # fused (tiny fixture)
-    monkeypatch.setenv("HARMONY_ALS_FUSE_ROWS", "0")
+    monkeypatch.setattr(factorization, "FUSE_ROWS", 0)
     U_d, V_d, rmse_d, n_d = als_fit(ratings)  # forced distributed
     assert n_f == n_d
     assert np.allclose(rmse_f, rmse_d, rtol=1e-9, atol=1e-12)

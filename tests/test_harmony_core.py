@@ -414,12 +414,12 @@ def test_spark_blocked_estep_matches_numpy(spark, spark_fixture_df):
 
 
 def test_fused_kmeans_chain_matches_per_iteration_path(spark, spark_fixture_df):
-    """The single-partition fused kmeans-loop pass (ONE Arrow round-trip
-    per harmony round, kernels.make_estep_chain_kernel) must reproduce
-    the per-iteration distributed path EXACTLY — same objective list,
-    same corrected embedding — because the Gauss-Seidel chain and the
-    objective live in shared helpers and a single partition implies a
-    single Arrow batch (identical accumulation order)."""
+    """The single-partition fused round pass (ONE Arrow round-trip per
+    harmony round, kernels.make_round_kernel) must reproduce the
+    per-partition path (cold-start pass + one E-step job per chain call)
+    EXACTLY — same objective list, same corrected embedding — because
+    both drive the one kernels.kmeans_chain and a single partition
+    implies a single Arrow batch (identical accumulation order)."""
     from harmony_spark.core.algorithm import HarmonySpark
 
     df, Z, blob, batch = spark_fixture_df
@@ -440,6 +440,60 @@ def test_fused_kmeans_chain_matches_per_iteration_path(spark, spark_fixture_df):
             model.cleanup()
         assert objs[0] == objs[1], (mode, objs)
         np.testing.assert_array_equal(outs[0], outs[1])
+
+
+@pytest.fixture(scope="module")
+def boundary_df(spark):
+    """10,001 cells: the smallest N the constructor splits into two
+    partitions (ceil(N / 10_000))."""
+    Z, blob, batch = make_fixture(n=10_001, d=10, seed=3)
+    rows = [(i, Z[i].tolist(), f"b{batch[i]}") for i in range(Z.shape[0])]
+    return spark.createDataFrame(rows, "cell_id long, features array<float>, batch string")
+
+
+@pytest.mark.parametrize("mode", ["batch", "blocked"])
+def test_fuse_cap_boundary_over_real_partitions(spark, boundary_df, monkeypatch, mode):
+    """Either side of the fuse cap on real partitions: cap = N keeps ONE
+    partition (the fused round pass), cap = N - 1 splits the same cells
+    into two (per-partition E-step jobs). The fits must agree within the
+    pinned cross-oracle tolerance and run the same number of E-steps."""
+    from harmony_spark.core import algorithm
+
+    N = boundary_df.count()
+    outs, rounds = [], []
+    for cap, nparts in ((N, 1), (N - 1, 2)):
+        monkeypatch.setattr(algorithm, "FUSE_CELLS", cap)
+        model = algorithm.HarmonySpark(
+            boundary_df, ["batch"], id_col="cell_id", theta=1.0, sigma=0.1,
+            lamb=1.0, nclust=8, max_iter=2, seed=11, estep_mode=mode,
+            n_blocks=(4 if mode == "blocked" else None),
+        )
+        assert model._cells_nparts == nparts
+        assert model.cells0.rdd.getNumPartitions() == nparts
+        out = model.run().orderBy("cell_id").collect()
+        outs.append(np.stack([r["z_corr"] for r in out]))
+        rounds.append(list(model.kmeans_rounds))
+        model.cleanup()
+    assert rounds[0] == rounds[1]
+    np.testing.assert_allclose(outs[0], outs[1], rtol=3e-3, atol=3e-3)
+
+
+def test_traced_run_entry_points_exist():
+    """The benchmark's traced run wraps every kernels.make_<kind>_kernel
+    of perfbench.probes.KERNEL_KINDS and algorithm.kmeans_centers by
+    name: a rename must fail here rather than in a traced run."""
+    import importlib.util
+    from pathlib import Path
+
+    from harmony_spark.core import algorithm, kernels
+
+    path = Path(__file__).resolve().parent.parent / "perfbench" / "probes.py"
+    spec = importlib.util.spec_from_file_location("perfbench_probes", path)
+    probes = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(probes)
+    for kind in probes.KERNEL_KINDS:
+        assert callable(getattr(kernels, f"make_{kind}_kernel", None)), kind
+    assert callable(getattr(algorithm, "kmeans_centers", None))
 
 
 def test_c5_support_filter_active_cross_oracle(spark, spark_fixture_df):
