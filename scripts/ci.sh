@@ -1,12 +1,21 @@
 #!/usr/bin/env bash
-# Full local gate: compile, test suite at sf0.001, benchmark helper
-# tests, oracle sweep at the driver's sf0.01, and the bench contract.
+# Full local gate: compile, the entry run, test suite at sf0.001,
+# benchmark helper tests, oracle sweep at the driver's sf0.01, and the
+# bench contract.
 # Mirrors the tier-1 list in ROADMAP.md.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== compile =="
 python -m compileall -q harmony_spark __spark_entry__.py
+
+echo "== entry run (flagship query on sf0.001 must return rows) =="
+python -c "
+import __spark_entry__ as E
+from harmony_spark.session import get_spark
+n = E.entry(get_spark('ci-entry')).count()
+assert n > 0, 'entry returned no rows'
+print(f'entry OK: {n} rows')"
 
 echo "== pytest (sf0.001 fixtures + unit/property/plan/streaming) =="
 python -m pytest tests/ -q

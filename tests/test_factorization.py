@@ -1,5 +1,6 @@
-"""NumPy cross-oracle for the distributed ALS (extensions/factorization.py):
-an independent dense replica of the identical math (same RNG-free init,
+"""NumPy cross-oracle for the per-partition census-kernel ALS
+(extensions/factorization.py), on one partition and on many: an
+independent dense replica of the identical math (same RNG-free init,
 same ridge normal equations, same iteration order) must agree with the
 Spark run to float tolerance at every iteration. The q137 registry row
 is rows-only; this is its oracle."""
@@ -92,13 +93,18 @@ def test_als_rmse_decreases(spark, ratings):
 
 
 def test_als_fused_matches_distributed(spark, ratings, monkeypatch):
-    """The fused single-pass ALS (FUSE_ROWS path) must agree
-    with the distributed per-iteration path to float tolerance — the
-    only difference between them is partial-sum order (~1e-12)."""
-    U_f, V_f, rmse_f, n_f = als_fit(ratings)  # fused (tiny fixture)
-    monkeypatch.setattr(factorization, "FUSE_ROWS", 0)
-    U_d, V_d, rmse_d, n_d = als_fit(ratings)  # forced distributed
-    assert n_f == n_d
+    """One partition (cap = n: every iteration in one job) must agree
+    with many partitions (cap = n - 1: one job per iteration) to float
+    tolerance — the only difference between them is partial-sum order
+    (~1e-12)."""
+    n = ratings.count()
+    monkeypatch.setattr(factorization, "FUSE_ROWS", n)
+    U_f, V_f, rmse_f, n_f = als_fit(ratings)
+    assert U_f.rdd.getNumPartitions() == 1
+    monkeypatch.setattr(factorization, "FUSE_ROWS", n - 1)
+    U_d, V_d, rmse_d, n_d = als_fit(ratings)
+    assert U_d.rdd.getNumPartitions() > 1
+    assert n_f == n_d == n
     assert np.allclose(rmse_f, rmse_d, rtol=1e-9, atol=1e-12)
     Vf = np.array([v for _, v in V_f.itertuples(index=False)])
     Vd = np.array([v for _, v in V_d.itertuples(index=False)])
@@ -108,6 +114,32 @@ def test_als_fused_matches_distributed(spark, ratings, monkeypatch):
     assert set(uf) == set(ud)
     for u in uf:
         assert np.allclose(uf[u], ud[u], rtol=1e-8, atol=1e-10)
+
+
+@pytest.mark.parametrize("cap", [4, 3], ids=["one_partition", "many_partitions"])
+def test_als_zero_iterations(spark, monkeypatch, cap):
+    """n_iter=0 on either side of the cap: the histogram's rating count,
+    no RMSEs, the init item factors and users solved against them."""
+    triples = [(1, 3, 2.0), (1, 5, 1.0), (2, 3, 4.0), (7, 5, 0.5)]
+    frame = spark.createDataFrame(triples, "user long, item long, rating double")
+    monkeypatch.setattr(factorization, "FUSE_ROWS", cap)
+    U_df, V_pd, rmses, n_got = als_fit(frame, n_iter=0)
+    assert (U_df.rdd.getNumPartitions() > 1) == (cap < len(triples))
+    assert n_got == len(triples)
+    assert rmses == []
+    V0 = _init_factors([3, 5])
+    assert V_pd["item"].tolist() == [3, 5]
+    assert np.array_equal(np.array(V_pd["vec"].tolist()), np.array(V0["vec"].tolist()))
+    V = dict(zip(V0["item"], np.array(V0["vec"].tolist())))
+    got_u = {r["user"]: r["vec"] for r in U_df.collect()}
+    assert set(got_u) == {1, 2, 7}
+    for u in got_u:
+        A, b = LAMB * np.eye(RANK), np.zeros(RANK)
+        for uu, i, r in triples:
+            if uu == u:
+                A += np.outer(V[i], V[i])
+                b += r * V[i]
+        assert np.allclose(got_u[u], np.linalg.solve(A, b), rtol=1e-9, atol=1e-12)
 
 
 def test_q137_registry_row(spark, sf_dir):
