@@ -16,13 +16,11 @@ explicit doc_id window, never as a global cross join.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from harmony_spark.io import table, table_parallel
+from harmony_spark.io import shared_build, table, table_parallel
 from harmony_spark.registry import register
 
 N_MINHASH = 8  # signature length
@@ -289,33 +287,23 @@ def _lsh_pairs_of(docs: DataFrame) -> DataFrame:
     )
 
 
+@shared_build("lsh_pairs")
 def _lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    # shared by q117/q123/q224/... — memoized per session under the
-    # warm-session flag (io.session_memo): the minhash signature build
-    # is the expensive leg and is deterministic over immutable inputs
-    from harmony_spark.io import session_memo
-
-    return session_memo(
-        spark,
-        ("lsh_pairs", os.path.abspath(sf)),
-        lambda: _lsh_pairs_of(table_parallel(spark, sf, "documents")),
-    )
+    # shared by q117/q123/q224/... — the minhash signature build is the
+    # expensive leg and is deterministic over immutable inputs
+    return _lsh_pairs_of(table_parallel(spark, sf, "documents"))
 
 
+@shared_build("lsh_cc")
 def _lsh_cc(spark: SparkSession, sf: str) -> DataFrame:
     """Connected-component labels over the LSH candidate graph —
     shared by q75 (cluster census) and q224 (representative pick);
     the iterative hash-to-min loop is deterministic over the
-    immutable corpus, so it is memoized per (appId, sf) alongside
-    the pair build it consumes."""
-    from harmony_spark.io import session_memo
+    immutable corpus, so it is a shared build alongside the pair
+    build it consumes."""
     from harmony_spark.operators.graph import connected_components
 
-    return session_memo(
-        spark,
-        ("lsh_cc", os.path.abspath(sf)),
-        lambda: connected_components(_lsh_pairs(spark, sf), "da", "db"),
-    )
+    return connected_components(_lsh_pairs(spark, sf), "da", "db")
 
 
 _CC_ORACLE = f"""
@@ -738,6 +726,13 @@ def _mask_pairs(spark, toks: DataFrame, vocab_rows, prefix_len) -> DataFrame:
     )
 
 
+@shared_build("q89_pairs")
+def _q89_pairs(spark: SparkSession, sf: str) -> DataFrame:
+    # the verified pair set (tokenize + vocab probe + bitmask build +
+    # self-join) is deterministic — same contract as _lsh_pairs
+    return prefix_filtered_pairs_exact(table_parallel(spark, sf, "documents"))
+
+
 @register(
     "q89_prefix_similarity_join",
     oracle=r"""
@@ -789,18 +784,7 @@ def _mask_pairs(spark, toks: DataFrame, vocab_rows, prefix_len) -> DataFrame:
     "5*i >= 3*u is Jaccard >= 0.6 without float edge cases.",
 )
 def q89(spark: SparkSession, sf: str) -> DataFrame:
-    from harmony_spark.io import session_memo
-
-    # the verified pair set (tokenize + vocab probe + bitmask build +
-    # self-join) is deterministic — memoize per session, same contract
-    # as _lsh_pairs
-    pairs = session_memo(
-        spark,
-        ("q89_pairs", os.path.abspath(sf)),
-        lambda: prefix_filtered_pairs_exact(
-            table_parallel(spark, sf, "documents")
-        ),
-    )
+    pairs = _q89_pairs(spark, sf)
     bucket = F.expr("(20 * i) div u").cast("long")
     return (
         pairs.groupBy(bucket.alias("bucket"))
@@ -1307,7 +1291,7 @@ def q132(spark: SparkSession, sf: str) -> DataFrame:
     "orientation changes the plan, never the count.",
 )
 def q139(spark: SparkSession, sf: str) -> DataFrame:
-    e = _lsh_pairs(spark, sf).localCheckpoint(eager=False)
+    e = _lsh_pairs(spark, sf)
     bi = e.unionByName(e.select(F.col("db").alias("da"), F.col("da").alias("db")))
     deg = bi.groupBy("da").agg(F.count("*").alias("d")).withColumnRenamed("da", "node")
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from harmony_spark.io import shared_build, table_parallel
 from harmony_spark.operators.graph import connected_components
 from harmony_spark.registry import register
 
@@ -26,29 +27,21 @@ ER_HEAD_CHARS = 30  # normalized comparison key: first 30 chars
 ER_MAX_EDITS = 10  # levenshtein threshold on the head
 
 
+@shared_build("doc_entities")
 def _doc_entities(spark: SparkSession, sf: str) -> DataFrame:
     """The resolved document-entity partition (node, component) shared
     VERBATIM by q167 and q273: identical rec projection (30-char head,
     first-two-token block), identical resolve_entities parameters.
-    Session-memoized (io.session_memo) so a warm session pays the
+    A shared build (io.shared_build) so a warm session pays the
     blocking join + star-CC rounds once — the same shared-graph-build
     memo the r6 verdict prescribed for q292/q352 and q75/q224."""
-    from harmony_spark.io import session_memo, table_parallel
-
-    def build() -> DataFrame:
-        toks = F.split(F.lower("text"), r"\s+")
-        rec = table_parallel(spark, sf, "documents").select(
-            "doc_id",
-            F.substring(F.lower("text"), 1, ER_HEAD_CHARS).alias("head"),
-            F.concat_ws(" ", F.slice(toks, 1, 2)).alias("blk"),
-        )
-        return resolve_entities(
-            rec, id_col="doc_id", key_col="head", block_col="blk"
-        )
-
-    import os as _os
-
-    return session_memo(spark, ("doc_entities", _os.path.abspath(sf)), build)
+    toks = F.split(F.lower("text"), r"\s+")
+    rec = table_parallel(spark, sf, "documents").select(
+        "doc_id",
+        F.substring(F.lower("text"), 1, ER_HEAD_CHARS).alias("head"),
+        F.concat_ws(" ", F.slice(toks, 1, 2)).alias("blk"),
+    )
+    return resolve_entities(rec, id_col="doc_id", key_col="head", block_col="blk")
 
 
 def resolve_entities(
@@ -206,8 +199,6 @@ def q167(spark: SparkSession, sf: str) -> DataFrame:
     "recursively plus the same deterministic votes.",
 )
 def q273(spark: SparkSession, sf: str) -> DataFrame:
-    from harmony_spark.io import table_parallel
-
     docs = table_parallel(spark, sf, "documents")
     cc = _doc_entities(spark, sf)
     # mem feeds two aggregates below; cc is already an eagerly
@@ -316,8 +307,6 @@ _FS_M = 0.9  # fixed m-probability (field agreement rate among true matches)
     "sort.",
 )
 def q314(spark: SparkSession, sf: str) -> DataFrame:
-    from harmony_spark.io import table_parallel
-
     toks = F.split(F.lower(F.col("text")), r"\s+")
     rec = table_parallel(spark, sf, "documents").select(
         "doc_id",

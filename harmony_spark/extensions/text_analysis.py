@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from harmony_spark.io import table
+from harmony_spark.io import shared_build, table
 from harmony_spark.registry import register
 
 # Tiny per-language marker sets for the n-gram/stopword language-ID
@@ -515,25 +515,14 @@ def _bm25_sql(terms=_BM25_TERMS) -> str:
     """
 
 
+@shared_build("bm25_table")
 def bm25_table(spark: SparkSession, sf: str, terms=_BM25_TERMS) -> DataFrame:
     """Unrounded BM25 scores (doc_id, bm25) for a fixed term set —
     the engine core behind q121 and the lexical leg of q122.
-    Session-memoized (the scores table is the serve-time artifact a
+    A shared build (the scores table is the serve-time artifact a
     lexical index materializes once): the full-corpus tokenize/explode
     feeds TWO branches (doc lengths + term frequencies), so a warm
     session skips both passes for every consumer."""
-    import os
-
-    from harmony_spark.io import session_memo
-
-    return session_memo(
-        spark,
-        ("bm25_table", os.path.abspath(sf), tuple(terms)),
-        lambda: _bm25_table_build(spark, sf, terms),
-    )
-
-
-def _bm25_table_build(spark: SparkSession, sf: str, terms) -> DataFrame:
     tok = table(spark, sf, "documents").select(
         "doc_id", F.explode(_tokens()).alias("tok")
     )

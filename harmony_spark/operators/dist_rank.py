@@ -20,12 +20,12 @@ Every step is a shuffle-parallel plan; nothing entity-scale ever passes
 through a single task.  Used by q185/q210/q221/q247/q276/q280 (and
 available to any future query needing a global order statistic).
 
-**Statistics cache** (HARMONY_STATS_CACHE=0 disables): the shard
-boundaries and per-shard counts are pure functions of the input plan,
-and a session's inputs are immutable (parquet snapshots / cached
-tables), so both are memoized per (session, analyzed-plan semanticHash,
-key, shards, partition_by).  A repeated query — the warm runs every
-warehouse serves, and the bench's best-of-N — then pays ZERO driver
+**Statistics cache**: the shard boundaries and per-shard counts are
+pure functions of the input plan, and a session's inputs are immutable
+(parquet snapshots / cached tables), so both are memoized per
+(session, analyzed-plan semanticHash, key, shards, partition_by).  A
+repeated query — the warm runs every warehouse serves, and the bench's
+best-of-N — then pays ZERO driver
 actions for phases 1-2 and runs the single phase-3 pass.  This is the
 same contract as Spark's own CBO statistics: cached derived stats over
 immutable-within-session data.  Callers whose input is freshly-written
@@ -36,10 +36,10 @@ testdata tables).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from harmony_spark.io import _evict_stale
 
 DEFAULT_SHARDS = 64
 
@@ -55,14 +55,12 @@ def _has_rdd_leaf(node) -> bool:
 
 def _stats_key(df: DataFrame, *extra) -> tuple | None:
     """Cache key from the ANALYZED logical plan's semantic hash (None =
-    caching unavailable/disabled).  Plans containing a LogicalRDD leaf
+    caching unavailable).  Plans containing a LogicalRDD leaf
     (a localCheckpoint) are NOT cacheable this way: the checkpoint RDD
     id changes on every call, so the hash never repeats — callers that
     checkpoint a shared input before ranking pass an explicit
     ``stats_token`` instead (asserting the input's in-session
     identity)."""
-    if os.environ.get("HARMONY_STATS_CACHE", "1") == "0":
-        return None
     try:
         analyzed = df._jdf.queryExecution().analyzed()
         if _has_rdd_leaf(analyzed):
@@ -71,23 +69,13 @@ def _stats_key(df: DataFrame, *extra) -> tuple | None:
     except Exception:  # noqa: BLE001 — cache is best-effort
         return None
     app_id = df.sparkSession.sparkContext.applicationId
-    _evict_stale(app_id)
+    _evict_stale(_STATS_CACHE, app_id)
     return (app_id, h, *extra)
 
 
-def _evict_stale(app_id: str) -> None:
-    """Drop stats entries from stopped sessions (same contract as
-    io._evict_stale): keys lead with applicationId, and stale entries
-    would otherwise accumulate for process lifetime."""
-    for k in [k for k in _STATS_CACHE if k[0] != app_id]:
-        del _STATS_CACHE[k]
-
-
-def _token_key(df: DataFrame, stats_token, *extra) -> tuple | None:
-    if os.environ.get("HARMONY_STATS_CACHE", "1") == "0":
-        return None
+def _token_key(df: DataFrame, stats_token, *extra) -> tuple:
     app_id = df.sparkSession.sparkContext.applicationId
-    _evict_stale(app_id)
+    _evict_stale(_STATS_CACHE, app_id)
     return (
         app_id,
         "tok",

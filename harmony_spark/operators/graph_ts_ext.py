@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from harmony_spark.io import scaled_partitions, shared_build, table_parallel
 from harmony_spark.registry import register
 
 __all__ = ["q225", "q226", "q227", "q235", "q237", "q242", "q243", "q254", "q258", "q262", "q271", "q272", "q274", "q278", "q282", "q283", "q284", "q292", "q293", "q352", "q363", "q374", "q375", "q380"]
@@ -22,6 +23,111 @@ _PR_ITERS = 5
 _PR_DAMP = 0.85
 
 
+@shared_build("copurchase_deg")
+def _copurchase_deg(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-part degree census (u, d) over the co-purchase graph:
+    q292's wedge count and q352's per-vertex denominators."""
+    return _degrees(_copurchase_pairs(spark, sf, src="u", dst="v"))
+
+
+def _degrees(pairs: DataFrame) -> DataFrame:
+    und = pairs.unionByName(
+        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    return und.groupBy("u").agg(F.count("*").alias("d"))
+
+
+@shared_build("copurchase_oriented")
+def _copurchase_oriented(spark: SparkSession, sf: str) -> DataFrame:
+    """Schank-Wagner degree-oriented edge set (s, t) over the part
+    co-purchase graph: every edge points from its (degree, id)-smaller
+    endpoint, so each triangle is generated exactly once and the
+    wedge fan-out per node is bounded by O(sqrt m)."""
+    pairs = _copurchase_pairs(spark, sf, src="u", dst="v")
+    # degrees of these same pairs, not the _copurchase_deg build (and in
+    # _copurchase_tri_edges, adjacency of this same orientation, not a
+    # build of its own): with the memo off every separate build makes
+    # the pair set again (q292 at sf0.1, memo off, 4 cores, 3 runs:
+    # 23-35 s with both as builds, 10.5-17.4 s without)
+    deg = _degrees(pairs)
+    ed = pairs.join(
+        deg.select(F.col("u").alias("du_key"), F.col("d").alias("deg_u")),
+        F.col("u") == F.col("du_key"),
+    ).join(
+        deg.select(F.col("u").alias("dv_key"), F.col("d").alias("deg_v")),
+        F.col("v") == F.col("dv_key"),
+    )
+    u_first = (F.col("deg_u") < F.col("deg_v")) | (
+        (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
+    )
+    return ed.select(
+        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
+    )
+
+
+@shared_build("copurchase_sym")
+def _copurchase_sym(spark: SparkSession, sf: str) -> DataFrame:
+    """Symmetric (src, dst) ∪ (dst, src) co-purchase edge set — the
+    bidirectional view q225 PageRank, q254 BFS and q258 LPA each
+    materialized per call (an eager checkpoint of ~2x the pair rows).
+    A shared build: one union + materialization per warm session,
+    every iterative consumer reads the blocks, and the checkpoint keeps
+    the orders×lineitem pair build out of every round's plan.
+
+    HASH-PARTITIONED ON ``src`` before materialization: every iterative
+    consumer joins this table on ``src`` once per round, so establishing
+    the partitioning once removes the per-round edge-set Exchange from
+    all of them (guide §2.4 — two operations keyed the same way share
+    one exchange; here it is one exchange against ~12 round-joins per
+    session).  localCheckpoint preserves the partitioning."""
+    pairs = _copurchase_pairs(spark, sf, build="join")
+    # partition count derived from the SOURCE table's bytes, not
+    # the configured shuffle width: the pair set is ~4x lineitem
+    # rows, so 2 MB of source parquet per partition keeps tasks at
+    # a few hundred k edge rows — at sf0.1 that is ~6 tasks per
+    # round instead of 32 near-empty ones (measured: 1 partition
+    # serializes the per-round join compute, 32 pays the task
+    # floor); at cluster scale the formula saturates at
+    # shuffle.partitions (io.scaled_partitions)
+    n_parts = scaled_partitions(
+        spark, sf, ("lineitem",), bytes_per_partition=2 * 1024 * 1024
+    )
+    return pairs.unionByName(
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).repartition(n_parts, F.col("src"))
+
+
+@shared_build("copurchase_tri_edges")
+def _copurchase_tri_edges(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-oriented-edge triangle witnesses (s, t, ws = N+(s) ∩ N+(t)) —
+    the adjacency-intersection pass q292 (global count: Σ size(ws)) and
+    q352 (per-vertex census: corner explode) both run verbatim.
+    A shared build like the orientation it extends: a warm session
+    running both graph queries pays the two broadcast joins + the
+    O(m·sqrt m) intersection compute once.  Edges with an empty
+    intersection are kept (q292 sums their 0; q352 filters them)."""
+    oriented = _copurchase_oriented(spark, sf)
+    # out-adjacency lists, read only here (see _copurchase_oriented);
+    # persisted and counted so both joins plan with adj's real size and
+    # broadcast it (q292's cold build at sf0.1, memo on, 4 cores,
+    # median of 6: 10.2 s with, 12.0 s without)
+    adj = oriented.groupBy("s").agg(F.collect_list("t").alias("nb")).persist()
+    adj.count()
+    return (
+        oriented.join(
+            adj.select(F.col("s").alias("ju"), F.col("nb").alias("nu")),
+            F.col("s") == F.col("ju"),
+        )
+        .join(
+            adj.select(F.col("s").alias("jv"), F.col("nb").alias("nv")),
+            F.col("t") == F.col("jv"),
+        )
+        .select("s", "t", F.array_intersect("nu", "nv").alias("ws"))
+    )
+
+
+@shared_build("copurchase")
 def _copurchase_pairs(
     spark: SparkSession,
     sf: str,
@@ -31,7 +137,6 @@ def _copurchase_pairs(
 ) -> DataFrame:
     """Deduped u<v part co-purchase pairs, shared by the graph family
     (PageRank q225, BFS q254, LPA q258, k-core q262, triangles q292).
-    Lazy — callers checkpoint/persist to their own fan-out.
 
     ``build="explode"``: per-order pair EXPLOSION — orders are bounded-
     width (7 lineitems in TPC-H; a capped basket generally), so
@@ -43,159 +148,8 @@ def _copurchase_pairs(
     allocation churn taxes the following iterations ~2 s on local[32];
     at cluster scale the explode build wins on shuffle volume).
 
-    Under the warm-session flag the canonical (src, dst) edge set is
-    memoized per session (io.session_memo) — five graph queries share
-    this exact build, and it is deterministic over immutable inputs."""
-    import os as _os
-
-    from harmony_spark.io import session_memo
-
-    return session_memo(
-        spark,
-        ("copurchase", _os.path.abspath(sf), build, src, dst),
-        lambda: _copurchase_pairs_build(spark, sf, src, dst, build),
-    )
-
-
-def _copurchase_oriented(spark: SparkSession, sf: str):
-    """Degree census + Schank-Wagner degree-oriented edge set +
-    out-adjacency lists over the part co-purchase graph — the build
-    q292 (global triangle count) and q352 (per-vertex clustering
-    coefficient) share verbatim.  Each piece is memoized per
-    (appId, sf) under the warm-session flag (io.session_memo), so a
-    session that runs both graph queries pays for the orientation
-    once; cold/CI runs keep the eager persist+count semantics (real
-    stats let Catalyst broadcast the node-scale lookups)."""
-    import os as _os
-
-    from harmony_spark.io import session_memo
-
-    key = _os.path.abspath(sf)
-
-    def build_deg() -> DataFrame:
-        pairs = _copurchase_pairs(spark, sf, src="u", dst="v")
-        und = pairs.unionByName(
-            pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        deg = und.groupBy("u").agg(F.count("*").alias("d")).persist()
-        deg.count()
-        return deg
-
-    deg = session_memo(spark, ("copurchase_deg", key), build_deg)
-
-    def build_oriented() -> DataFrame:
-        pairs = _copurchase_pairs(spark, sf, src="u", dst="v")
-        ed = pairs.join(
-            deg.select(F.col("u").alias("du_key"), F.col("d").alias("deg_u")),
-            F.col("u") == F.col("du_key"),
-        ).join(
-            deg.select(F.col("u").alias("dv_key"), F.col("d").alias("deg_v")),
-            F.col("v") == F.col("dv_key"),
-        )
-        u_first = (F.col("deg_u") < F.col("deg_v")) | (
-            (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
-        )
-        return ed.select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-        ).localCheckpoint(eager=True)
-
-    oriented = session_memo(
-        spark, ("copurchase_oriented", key), build_oriented
-    )
-
-    def build_adj() -> DataFrame:
-        adj = (
-            oriented.groupBy("s").agg(F.collect_list("t").alias("nb")).persist()
-        )
-        adj.count()
-        return adj
-
-    adj = session_memo(spark, ("copurchase_adj", key), build_adj)
-    return deg, oriented, adj
-
-
-def _copurchase_sym(spark: SparkSession, sf: str) -> DataFrame:
-    """Symmetric (src, dst) ∪ (dst, src) co-purchase edge set — the
-    bidirectional view q225 PageRank, q254 BFS and q258 LPA each
-    materialized per call (an eager checkpoint of ~2x the pair rows).
-    Session-memoized: one union + materialization per warm session,
-    every iterative consumer reads the blocks.
-
-    HASH-PARTITIONED ON ``src`` before materialization: every iterative
-    consumer joins this table on ``src`` once per round, so establishing
-    the partitioning once removes the per-round edge-set Exchange from
-    all of them (guide §2.4 — two operations keyed the same way share
-    one exchange; here it is one exchange against ~12 round-joins per
-    session).  localCheckpoint preserves the partitioning.  Cold/CI runs
-    (memo off) keep eager per-call semantics via the in-build eager
-    checkpoint, so iterative consumers never inline the orders×lineitem
-    pair build into every round's plan."""
-    import os as _os
-
-    from harmony_spark.io import _cache_enabled, scaled_partitions, session_memo
-
-    def build() -> DataFrame:
-        pairs = _copurchase_pairs(spark, sf, build="join")
-        # partition count derived from the SOURCE table's bytes, not
-        # the configured shuffle width: the pair set is ~4x lineitem
-        # rows, so 2 MB of source parquet per partition keeps tasks at
-        # a few hundred k edge rows — at sf0.1 that is ~6 tasks per
-        # round instead of 32 near-empty ones (measured: 1 partition
-        # serializes the per-round join compute, 32 pays the task
-        # floor); at cluster scale the formula saturates at
-        # shuffle.partitions (io.scaled_partitions)
-        n_parts = scaled_partitions(
-            spark, sf, ("lineitem",), bytes_per_partition=2 * 1024 * 1024
-        )
-        sym = pairs.unionByName(
-            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).repartition(n_parts, F.col("src"))
-        if not _cache_enabled():
-            sym = sym.localCheckpoint(eager=True)
-        return sym
-
-    return session_memo(
-        spark, ("copurchase_sym", _os.path.abspath(sf)), build
-    )
-
-
-def _copurchase_tri_edges(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-oriented-edge triangle witnesses (s, t, ws = N+(s) ∩ N+(t)) —
-    the adjacency-intersection pass q292 (global count: Σ size(ws)) and
-    q352 (per-vertex census: corner explode) both run verbatim.
-    Session-memoized like the orientation build it extends: a warm
-    session running both graph queries pays the two broadcast joins +
-    the O(m·sqrt m) intersection compute once.  Edges with an empty
-    intersection are kept (q292 sums their 0; q352 filters them)."""
-    import os as _os
-
-    from harmony_spark.io import session_memo
-
-    def build() -> DataFrame:
-        _, oriented, adj = _copurchase_oriented(spark, sf)
-        return (
-            oriented.join(
-                adj.select(F.col("s").alias("ju"), F.col("nb").alias("nu")),
-                F.col("s") == F.col("ju"),
-            )
-            .join(
-                adj.select(F.col("s").alias("jv"), F.col("nb").alias("nv")),
-                F.col("t") == F.col("jv"),
-            )
-            .select("s", "t", F.array_intersect("nu", "nv").alias("ws"))
-        )
-
-    return session_memo(
-        spark, ("copurchase_tri_edges", _os.path.abspath(sf)), build
-    )
-
-
-def _copurchase_pairs_build(
-    spark: SparkSession, sf: str, src: str, dst: str, build: str
-) -> DataFrame:
-    from harmony_spark.io import table_parallel
-
+    A shared build: five graph queries read this exact edge set, and
+    it is deterministic over immutable inputs."""
     lip = table_parallel(spark, sf, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -303,9 +257,9 @@ def _pagerank_oracle() -> str:
 def q225(spark: SparkSession, sf: str) -> DataFrame:
     from harmony_spark.operators.graph import pagerank
 
-    # session-memoized symmetric edge list: pagerank() references edges
-    # every iteration, and the memo's checkpoint materializes once per
-    # session instead of once per call (see _copurchase_sym)
+    # shared symmetric edge list: pagerank() references edges every
+    # iteration and reads its checkpoint's blocks, built once per call
+    # (once per session with the memo on; see _copurchase_sym)
     edges = _copurchase_sym(spark, sf)
     return (
         pagerank(edges, n_iter=_PR_ITERS, damping=_PR_DAMP)
@@ -970,9 +924,7 @@ def _lpa_oracle() -> str:
     "per round. Determinism: all-integer counts, min-label ties.",
 )
 def q258(spark: SparkSession, sf: str) -> DataFrame:
-    # session-memoized symmetric view (shared with q225/q254); the memo
-    # materializes once per session, replacing the per-call checkpoint
-    # of the undirected half
+    # shared symmetric view (with q225/q254), read through its checkpoint
     edges = _copurchase_sym(spark, sf)
     # the distinct node census reuses the memo's src-partitioning (no
     # exchange); the whole 3-round chain below is LAZY — each round's
@@ -1526,9 +1478,9 @@ def _hits_oracle() -> str:
     "authority with part-id tiebreak.".format(_HITS_ITERS),
 )
 def q274(spark: SparkSession, sf: str) -> DataFrame:
-    # shared session-memoized bipartite (see _custpart_flat); the memo's
-    # lazy checkpoint materializes on the first round's action and every
-    # later iteration (and q278/q282) reads the blocks
+    # shared bipartite build (see _custpart_flat); its lazy checkpoint
+    # materializes on the first round's action and every later
+    # iteration (and q278/q282) reads the blocks
     e = _custpart_flat(spark, sf)
     # Unnormalized power chain: per-step L2 normalization is a SCALAR
     # factor that commutes through the linear maps E/Eᵀ, so the whole
@@ -1566,70 +1518,41 @@ def q274(spark: SparkSession, sf: str) -> DataFrame:
 _AA_MAXBUYERS = 20
 
 
+@shared_build("custpart_bp")
 def _custpart_bipartite(spark: SparkSession, sf: str) -> DataFrame:
     """Distinct (cust, part, is_test) purchase bipartite from
     orders × lineitem, the base build three recommender/graph queries
     derive from: q282 (train/test split on the flag), q274 HITS and
     q278 Adamic-Adar (flagless projection via _custpart_flat).
-    Session-memoized — one orders×lineitem join + distinct per warm
-    session instead of one per query per run."""
-    import os as _os
-
-    from harmony_spark.io import _cache_enabled, session_memo, table_parallel
-
-    def build() -> DataFrame:
-        o = table_parallel(spark, sf, "orders").select(
-            "o_orderkey",
-            "o_custkey",
-            (F.to_date("o_orderdate") >= F.lit(_RC_PIVOT)).alias("is_test"),
+    A shared build — one orders×lineitem join + distinct per warm
+    session instead of one per query per run, and its checkpoint keeps
+    that build out of every half-step of q274's single HITS plan."""
+    o = table_parallel(spark, sf, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        (F.to_date("o_orderdate") >= F.lit(_RC_PIVOT)).alias("is_test"),
+    )
+    li = table_parallel(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
+    return (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .select(
+            F.col("o_custkey").alias("cust"),
+            F.col("l_partkey").alias("part"),
+            "is_test",
         )
-        li = table_parallel(spark, sf, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        bp = (
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .select(
-                F.col("o_custkey").alias("cust"),
-                F.col("l_partkey").alias("part"),
-                "is_test",
-            )
-            .distinct()
-        )
-        if not _cache_enabled():
-            # cold/CI runs (memo off) keep eager per-call semantics:
-            # iterative consumers (q274's unnormalized HITS chain)
-            # otherwise inline the orders×lineitem build into every
-            # half-step of a single plan
-            bp = bp.localCheckpoint(eager=True)
-        return bp
-
-    return session_memo(
-        spark, ("custpart_bp", _os.path.abspath(sf)), build
+        .distinct()
     )
 
 
+@shared_build("custpart_bp_flat")
 def _custpart_flat(spark: SparkSession, sf: str) -> DataFrame:
     """Flagless distinct (cust, part) bipartite (q274/q278): projected
-    off the flagged memo — a (cust, part) appearing under either flag
-    is exactly a (cust, part) in the raw distinct — so the warm path
-    re-distincts 600k memoized rows instead of re-joining the fact
-    tables."""
-    import os as _os
-
-    from harmony_spark.io import _cache_enabled, session_memo
-
-    def build() -> DataFrame:
-        flat = _custpart_bipartite(spark, sf).select("cust", "part").distinct()
-        if not _cache_enabled():
-            # cold runs: q274's fused HITS chain references the edge set
-            # every half-step — keep it an eager per-call checkpoint so
-            # the distinct never re-runs inside the round plans
-            flat = flat.localCheckpoint(eager=True)
-        return flat
-
-    return session_memo(
-        spark, ("custpart_bp_flat", _os.path.abspath(sf)), build
-    )
+    off the flagged build — a (cust, part) appearing under either flag
+    is exactly a (cust, part) in the raw distinct — so it re-distincts
+    600k checkpointed rows instead of re-joining the fact tables, and
+    q274's HITS chain, which references it every half-step, never
+    re-runs the distinct inside the round plans."""
+    return _custpart_bipartite(spark, sf).select("cust", "part").distinct()
 
 
 @register(
@@ -2131,11 +2054,11 @@ def q284(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q292(spark: SparkSession, sf: str) -> DataFrame:
     # Degree census + Schank-Wagner degree orientation + bounded
-    # out-adjacency — the shared (and session-memoized) build; see
-    # _copurchase_oriented for the O(sqrt m) wedge-bound rationale.
-    # Orientation changes the plan, never the count — the oracle keeps
-    # the plain id-ordered 3-way join.
-    deg, _, _ = _copurchase_oriented(spark, sf)
+    # out-adjacency — the shared builds; see _copurchase_oriented for
+    # the O(sqrt m) wedge-bound rationale.  Orientation changes the
+    # plan, never the count — the oracle keeps the plain id-ordered
+    # 3-way join.
+    deg = _copurchase_deg(spark, sf)
     wedges = deg.agg(
         F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("w")
     )
@@ -2292,9 +2215,9 @@ def q293(spark: SparkSession, sf: str) -> DataFrame:
     "coefficient histogram.",
 )
 def q352(spark: SparkSession, sf: str) -> DataFrame:
-    # Same session-memoized orientation build as q292 — a warm session
-    # running both graph queries pays for it once.
-    deg, _, _ = _copurchase_oriented(spark, sf)
+    # Same shared orientation builds as q292 — a warm session running
+    # both graph queries pays for them once.
+    deg = _copurchase_deg(spark, sf)
     # Per-corner triangle counts WITHOUT exploding each triangle to 3
     # rows: for an oriented edge (s,t) with c = |N+(s) ∩ N+(t)|, s and
     # t each gain c triangles (one contribution row apiece) and only

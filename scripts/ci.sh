@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Full local gate: compile, the entry run, test suite at sf0.001,
-# benchmark helper tests, oracle sweep at the driver's sf0.01, and the
-# bench contract.
+# benchmark helper tests, oracle sweep and shared-build memo parity at
+# the driver's sf0.01, and the bench contract.
 # Mirrors the tier-1 list in ROADMAP.md.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -25,6 +25,9 @@ python -m pytest perfbench -q
 
 echo "== oracle sweep at sf0.01 (the driver's correctness SF) =="
 HARMONY_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_queries.py -q
+
+echo "== shared-build memo-on/off parity at sf0.01 =="
+HARMONY_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_io_cache.py -q
 
 echo "== bench contract (one JSON line) =="
 python bench.py 2>/dev/null | python -c "

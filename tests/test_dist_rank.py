@@ -140,13 +140,13 @@ def test_single_distinct_value_and_empty(spark):
     assert tot2 == 0 and g2.count() == 0
 
 
-def test_stats_cache_hit_is_equal_and_skips_actions(spark, monkeypatch):
+def test_stats_cache_hit_is_equal_and_skips_actions(spark):
     """The (bounds, counts) statistics cache: a repeated call with the
     SAME input plan must return identical ranks (warm path, zero
     boundary/count actions) and must register exactly one cache entry;
     a localCheckpoint-derived input (LogicalRDD leaf — unstable plan
     identity) must NOT be auto-cached unless the caller passes an
-    explicit stats_token; HARMONY_STATS_CACHE=0 bypasses everything."""
+    explicit stats_token."""
     from harmony_spark import io as hio
     from harmony_spark.operators import dist_rank as dr
 
@@ -173,9 +173,3 @@ def test_stats_cache_hit_is_equal_and_skips_actions(spark, monkeypatch):
     assert tot5 == tot1
     assert {(r.id, r.rn) for r in tok.collect()} == cold_rows
     assert len(dr._STATS_CACHE) == before + 2  # explicit token cached
-
-    monkeypatch.setenv("HARMONY_STATS_CACHE", "0")
-    off, tot3 = with_global_rank(df, "v", ("id",), out="rn")
-    assert tot3 == tot1
-    assert {(r.id, r.rn) for r in off.collect()} == cold_rows
-    assert len(dr._STATS_CACHE) == before + 2  # nothing new cached

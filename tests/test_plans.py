@@ -18,12 +18,26 @@ import pytest
 from harmony_spark.registry import load_all
 
 
-def plan_of(spec, spark, sf_dir, mode: str = "formatted") -> str:
-    df = spec.fn(spark, sf_dir)
+def explain(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain(mode)
     return buf.getvalue()
+
+
+def plan_of(spec, spark, sf_dir, mode: str = "formatted") -> str:
+    return explain(spec.fn(spark, sf_dir), mode)
+
+
+def shared_build_plans(spark, sf_dir):
+    """``(name, df)`` for every shared build, built raw: a consumer's
+    plan reads a build through its checkpoint, so the build's own plan
+    is checked here, once."""
+    from harmony_spark import io as hio
+
+    load_all()
+    for name, fn in sorted(hio.SHARED_BUILDS.items()):
+        yield name, fn.__wrapped__(spark, sf_dir)
 
 
 def test_q01_pushdown_and_pruning(spark, sf_dir):
@@ -78,9 +92,11 @@ def test_q18_no_global_window_shuffle(spark, sf_dir):
 
 
 def test_q35_join_keyed_on_band(spark, sf_dir):
-    """LSH candidate pairing must join on the band hash (bucket-local),
-    never cross-join documents."""
-    plan = plan_of(load_all()["q35_minhash_lsh_pairs"], spark, sf_dir, mode="simple")
+    """LSH candidate pairing (the shared pair build q35 reads) must join
+    on the band hash (bucket-local), never cross-join documents."""
+    from harmony_spark.extensions.dedup import _lsh_pairs
+
+    plan = explain(_lsh_pairs.__wrapped__(spark, sf_dir), mode="simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -111,6 +127,7 @@ _TINY_SIDE_NESTED_LOOP_OK = {
     "q115_graph_centrality",  # cross join vs the 1-row node count
     "q116_embedding_covariance",  # cross join vs the 1-row vector count
     "q121_bm25_scores",  # cross join vs the 1-row corpus stats
+    "bm25_table",  # q121's shared build: the same 1-row stats cross join
     "q122_hybrid_rrf",  # same BM25 leg + 1-row query-vector broadcast
     "q139_triangle_census",  # cross join of three single-row census aggregates
     "q141_hard_negatives",  # inequality join vs 20 broadcast anchor vectors
@@ -376,6 +393,10 @@ def test_no_single_task_window_anywhere(spark, sf_dir):
         hits = _empty_partition_windows(spec.fn(spark, sf_dir))
         if hits:
             offenders[name] = hits[0][:160]
+    for name, df in shared_build_plans(spark, sf_dir):
+        hits = _empty_partition_windows(df)
+        if hits:
+            offenders[name] = hits[0][:160]
     assert not offenders, f"single-task global windows: {offenders}"
 
 
@@ -388,6 +409,12 @@ def test_no_unbounded_cartesian_anywhere(spark, sf_dir):
         if name in _TINY_SIDE_NESTED_LOOP_OK or spec.oracle is None:
             continue
         plan = plan_of(spec, spark, sf_dir, mode="simple")
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
+    for name, df in shared_build_plans(spark, sf_dir):
+        if name in _TINY_SIDE_NESTED_LOOP_OK:
+            continue
+        plan = explain(df, mode="simple")
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
 
